@@ -12,19 +12,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator registering a query and (optionally) its DuckDB oracle SQL.
-
-    Queries without an oracle get the driver's weaker rows-only check
-    (reserved for genuinely non-SQL-expressible ops).
-    """
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Decorator registering a query and its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco

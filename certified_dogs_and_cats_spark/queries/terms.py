@@ -23,11 +23,12 @@ LIFT_K = 20
 
 
 def _slit(s: str) -> str:
-    """SQL single-quoted-string body for ``s``: double any embedded
-    quote. The module's own term constants are plain lowercase words,
-    but ``_bm25_scored`` accepts caller-supplied terms (ADVICE r12 #1 —
-    a quote in a term must not break parsing or inject SQL)."""
-    return s.replace("'", "''")
+    """Spark SQL single-quoted-string body for ``s``: escape backslashes
+    first (Spark reads ``\\`` as an escape character), then double any
+    embedded quote. The module's own term constants are plain lowercase
+    words, but ``_bm25_scored`` accepts caller-supplied terms: a quote or
+    backslash in a term must not break parsing or inject SQL."""
+    return s.replace("\\", "\\\\").replace("'", "''")
 
 
 def _dlit(x: float) -> str:

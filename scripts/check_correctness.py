@@ -1,16 +1,17 @@
-"""Local stand-in for the driver's correctness gate.
+"""Spark-vs-DuckDB correctness gate.
 
 Runs every registered query on Spark and its oracle on DuckDB at the given
 sf dir, compares row count, column names, and order-insensitive values
 (exact equality after stringify-and-sort — stricter than a hash, same idea).
+The test suite runs the same per-query check (:func:`check_query`) for
+every query in ``tests/test_oracle_gate.py``.
 
 Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 
 When run over the FULL registry (no query filter), the per-query results
-are also written to ``CORRECTNESS_local.json`` at the repo root in the
-driver's row format, so the builder-side gate is a committed, auditable
-artifact covering every registered query — including the ones outside
-the driver's 50-entry per-round window.
+are also written to ``CORRECTNESS_local.json`` at the repo root, one row
+per query in the format of the ``CORRECTNESS_r*.json`` artifacts, so a
+full gate run leaves a committed, auditable record of every query.
 """
 
 from __future__ import annotations
@@ -45,115 +46,95 @@ def normalize(rows, cols):
     return [cols[i] for i in order], out
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = get_spark("check_correctness", cpus=8, shuffle_partitions=8)
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table in ``sf_dir``."""
     con = duckdb.connect()
     for name in TESTDATA_TABLES:
         con.sql(
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
+    return con
+
+
+def _row(rows_match, schema_match, hash_match, spark_rows, oracle_rows, err):
+    return {
+        "rows_match": rows_match, "schema_match": schema_match,
+        "hash_match": hash_match, "spark_rows": spark_rows,
+        "oracle_rows": oracle_rows, "err": err,
+    }
+
+
+def check_query(spark, con, sf_dir: str, name: str) -> dict:
+    """Run query ``name`` on Spark and its oracle on ``con``; return its
+    ``CORRECTNESS_local.json`` row. The query passes iff ``hash_match``
+    is true, which implies matching columns and row count; ``err`` says
+    why it failed."""
+    try:
+        sdf = QUERIES[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return _row(False, False, False, None, None, f"spark error: {e}")
+    finally:
+        # Release any frames the query persist()ed (dedup shingles): a
+        # full-registry sweep must not accumulate executor cache.
+        release_cached()
+        spark.catalog.clearCache()
+    try:
+        rel = con.sql(ORACLE[name])
+        dcols = list(rel.columns)
+        drows = rel.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return _row(False, False, False, len(srows), None,
+                    f"duckdb error: {e}")
+    msgs = []
+    schema_match = sorted(scols) == sorted(dcols)
+    rows_match = len(srows) == len(drows)
+    if not schema_match:
+        msgs.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    if not rows_match:
+        msgs.append(f"rows spark={len(srows)} duck={len(drows)}")
+    hash_match = False
+    if not msgs:
+        _, sn = normalize(srows, scols)
+        _, dn = normalize(drows, dcols)
+        hash_match = sn == dn
+        if not hash_match:
+            diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+            msgs.append(f"values differ, first diffs: {diff}")
+    return _row(rows_match, schema_match, hash_match, len(srows),
+                len(drows), "; ".join(msgs) if msgs else None)
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    names = [n for n in QUERIES if not only or n in only]
+    spark = get_spark("check_correctness", cpus=8, shuffle_partitions=8)
+    con = oracle_connection(sf_dir)
     failures = []
     results: dict[str, dict] = {}
-    for name, fn in QUERIES.items():
-        if only and name not in only:
-            continue
+    for name in names:
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            # Release any frames the query persist()ed (dedup shingles):
-            # a full-registry sweep must not accumulate executor cache.
-            release_cached()
-            spark.catalog.clearCache()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            results[name] = {
-                "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": None,
-                "oracle_rows": None, "err": f"spark error: {e}",
-            }
-            print(f"FAIL  {name}: spark error: {e}")
-            continue
-        if name not in ORACLE:
-            results[name] = {
-                "rows_match": None, "schema_match": None,
-                "hash_match": None, "spark_rows": len(srows),
-                "oracle_rows": None, "err": None,
-            }
-            print(f"skip  {name}: no oracle ({len(srows)} rows, "
+        row = results[name] = check_query(spark, con, sf_dir, name)
+        if row["hash_match"]:
+            print(f"ok    {name} ({row['spark_rows']} rows, "
                   f"{time.time()-t0:.1f}s)")
-            continue
-        try:
-            rel = con.sql(ORACLE[name])
-            dcols = list(rel.columns)
-            drows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
+        else:
             failures.append(name)
-            results[name] = {
-                "rows_match": False, "schema_match": False,
-                "hash_match": False, "spark_rows": len(srows),
-                "oracle_rows": None, "err": f"duckdb error: {e}",
-            }
-            print(f"FAIL  {name}: duckdb error: {e}")
-            continue
-        ok = True
-        msgs = []
-        schema_match = sorted(scols) == sorted(dcols)
-        rows_match = len(srows) == len(drows)
-        if not schema_match:
-            ok = False
-            msgs.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        if not rows_match:
-            ok = False
-            msgs.append(f"rows spark={len(srows)} duck={len(drows)}")
-        hash_match = False
-        if ok:
-            _, sn = normalize(srows, scols)
-            _, dn = normalize(drows, dcols)
-            hash_match = sn == dn
-            if not hash_match:
-                ok = False
-                diff = [
-                    (a, b) for a, b in zip(sn, dn) if a != b
-                ][:3]
-                msgs.append(f"values differ, first diffs: {diff}")
-        status = "ok   " if ok else "FAIL "
-        if not ok:
-            failures.append(name)
-        results[name] = {
-            "rows_match": rows_match, "schema_match": schema_match,
-            "hash_match": hash_match, "spark_rows": len(srows),
-            "oracle_rows": len(drows),
-            "err": "; ".join(msgs) if msgs else None,
-        }
-        print(f"{status} {name} ({len(srows)} rows, {time.time()-t0:.1f}s)"
-              + ("  " + "; ".join(msgs) if msgs else ""))
+            print(f"FAIL  {name}: {row['err']}")
     if not only:
         repo_root = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
-        # Bind the artifact to the CODE it proved (ADVICE r12 #3): the
-        # registry-window escape hatch trusts this file, so each row
-        # carries the query's implementation fingerprint at gate time —
-        # a later edit makes the row visibly stale without any reliance
-        # on git state or mtimes.
-        from certified_dogs_and_cats_spark.queries.fingerprints import (
-            current_fingerprints,
-        )
-
-        results["_fingerprints"] = current_fingerprints()
         with open(
             os.path.join(repo_root, "CORRECTNESS_local.json"), "w"
         ) as f:
             json.dump(results, f, indent=2)
         print(f"full-registry artifact: CORRECTNESS_local.json "
-              f"({len(results)} entries)")
-    checked = len(results) if only else len(QUERIES)
+              f"({len(names)} queries)")
     scope = "checked queries" if only else "queries"
-    print(f"\n{checked - len(failures)}/{checked} {scope} pass")
+    print(f"\n{len(names) - len(failures)}/{len(names)} {scope} pass")
     return 1 if failures else 0
 
 

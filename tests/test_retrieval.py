@@ -164,6 +164,41 @@ def test_bm25_textbook_single_term_ranking_matches_log_free(
     assert r_rank == t_rank and len(r_rank) > 0
 
 
+def test_bm25_terms_with_backslash_and_quote_match_literally(
+    spark, monkeypatch
+):
+    """Caller-supplied terms are interpolated into Spark SQL string
+    literals: a trailing backslash or a backslash-quote must neither break
+    parsing nor change which token a term matches. Scoring the special
+    terms must equal scoring the same corpus with each special token
+    renamed to a plain one, and near-miss decoys must not hit."""
+    from certified_dogs_and_cats_spark.queries import terms as terms_mod
+
+    special = ("x\\", "a\\'b", "it's")
+    plain = dict(zip(special, ("xq", "aqb", "itqs")))
+    texts = [
+        "x\\ x\\ filler",
+        "a\\'b it's filler filler",
+        "it's",
+        "x a'b a\\b its x\\\\ filler",  # decoys: no term occurs
+    ]
+
+    def scored(terms, rename):
+        rows = [
+            (i, " ".join(rename.get(w, w) for w in text.split(" ")), "en",
+             "s", len(text))
+            for i, text in enumerate(texts, start=1)
+        ]
+        df = _docs(spark, rows)
+        monkeypatch.setattr(terms_mod, "t", lambda _s, _d, _n: df)
+        out = terms_mod._bm25_scored(spark, "unused", k=10, terms=terms)
+        return sorted(tuple(r) for r in out.collect())
+
+    got = scored(special, {})
+    assert {r[0]: r[1] for r in got} == {1: 1, 2: 2, 3: 1}
+    assert got == scored(tuple(plain.values()), plain)
+
+
 def test_series_ln_bit_identical_cross_engine(spark):
     """functions/detln.py's contract: the SAME (num, den) integer pair
     produces the BIT-IDENTICAL double in Spark and DuckDB (and stays

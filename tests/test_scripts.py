@@ -29,7 +29,6 @@ def test_all_probe_scripts_import():
         "scaling_lakehouse.py",
         "shuffle_report.py",
         "streaming_state_report.py",
-        "record_fingerprints.py",
     ):
         _load(name)
 
